@@ -155,10 +155,11 @@ def q_cascade_extmap(spark, sf_dir):
 
 
 # cascade_wide fixture: 290 extensions spanning the widened metadata
-# snapshot (VERDICT r01 #2), each a single-candidate ext whose classification
-# is text-independent (not shebang/modeline/heuristic-gated), pinned to its
-# expected language. The DuckDB oracle restates this list literally, so a
-# snapshot regression (ext dropped/remapped) breaks the hash match.
+# snapshot (VERDICT r01 #2; provenance in linguistjs_spark/data/PROVENANCE.md),
+# each a single-candidate ext whose classification is text-independent (not
+# shebang/modeline/heuristic-gated), pinned to its expected language. The
+# DuckDB oracle restates this list literally, so a snapshot regression (ext
+# dropped/remapped) breaks the hash match.
 _WIDE_EXT_LANGS = [
     (".go", "Go"), (".swift", "Swift"), (".kt", "Kotlin"), (".kts", "Kotlin"),
     (".dart", "Dart"), (".rb", "Ruby"), (".java", "Java"), (".scala", "Scala"),
@@ -201,10 +202,9 @@ _WIDE_EXT_LANGS = [
     (".sj", "Objective-J"), (".twig", "Twig"), (".uc", "UnrealScript"),
     (".ur", "UrWeb"), (".vb", "Visual Basic .NET"), (".vbs", "VBScript"),
     (".vtl", "Velocity Template Language"), (".vtt", "WebVTT"),
-    # batch-2 widening (scripts/widen_snapshot2.py). Batch 14 made .mojo
-    # heuristic-gated (Mojo/XML group), so its wide pin — which requires a
-    # text-INDEPENDENT classification — moved to the single-claimant flame
-    # alias; .mojo itself is pinned per rule branch in _HEUR_CASES.
+    # .mojo is heuristic-gated (Mojo/XML group), so its wide pin — which
+    # requires a text-INDEPENDENT classification — is the single-claimant
+    # flame alias; .mojo itself is pinned per rule branch in _HEUR_CASES.
     (".\U0001F525", "Mojo"), (".astro", "Astro"), (".kdl", "KDL"),
     (".rexx", "REXX"), (".x68", "Assembly"),
     (".red", "Red"), (".self", "Self"), (".boo", "Boo"), (".x10", "X10"),
@@ -220,13 +220,11 @@ _WIDE_EXT_LANGS = [
     (".csd", "Csound Document"), (".sco", "Csound Score"),
     (".kicad_pcb", "KiCad Layout"),
     (".lvproj", "LabVIEW"), (".ol", "Jolie"), (".cdf", "Mathematica"),
-    # batch-3 widening (scripts/widen_heuristics3.py): single-candidate
-    # exts of the newly added languages (their contested exts are pinned
-    # with real content in cascade_heuristics instead)
+    # single-candidate exts of languages whose contested exts are pinned
+    # with real content in cascade_heuristics instead
     (".reb", "Rebol"), (".xi", "Logos"), (".gbr", "Gerber Image"),
     (".dlm", "IDL"), (".pri", "QMake"),
-    # batch-4 widening (scripts/widen_langs4.py): unique-ext languages of
-    # the 580-language snapshot. Group-bearing children pin their COLLAPSED
+    # unique-ext languages. Group-bearing children pin their COLLAPSED
     # parent label (.bib->TeX, .ebuild->Shell, .rbs->Ruby...)
     # so these rows double as C7 group-collapse pins. Binary-filtered exts
     # (.snap .rtf .stl .xbm .xpm) are deliberately absent: they classify
@@ -271,16 +269,12 @@ _WIDE_EXT_LANGS = [
     (".ws", "Witcher Script"), (".xaml", "XAML"), (".xpl", "XProc"),
     (".xs", "XS"), (".yul", "Yul"), (".zap", "ZAP"), (".zeek", "Zeek"),
     (".ec", "eC"), (".mu", "mupad"), (".ooc", "ooc"),
-    # batch-5 widening (scripts/widen_heuristics5.py)
     (".ch", "xBase"), (".rakutest", "Raku"), (".cps", "Component Pascal"),
-    # batch-6 backfill: .json/.yaml/.yml/.pod/.asy/.mc/.plist/.ms moved OUT
-    # of this text-independent list when widen_heuristics6 gave them content
-    # disambiguation groups (their classification now depends on doc text);
-    # replaced with still-single-candidate exts of the 603-language snapshot
+    # .json/.yaml/.yml/.pod/.asy/.mc/.plist/.ms are absent: they own content
+    # disambiguation groups (their classification depends on doc text)
     (".abap", "ABAP"), (".abnf", "ABNF"), (".ada", "Ada"), (".apl", "APL"),
     (".au3", "AutoIt"), (".bats", "Shell"), (".bzl", "Starlark"),
     (".cairo", "Cairo"),
-    # batch-11 widening (scripts/widen_langs11.py)
     (".f90", "Fortran Free Form"), (".ics", "iCalendar"),
     (".cds", "CAP CDS"), (".ispc", "ISPC"), (".d2", "D2"),
     (".4gl", "Genero 4gl"), (".per", "Genero per"),
@@ -291,7 +285,7 @@ _WIDE_EXT_LANGS = [
     (".ha", "Hare"), (".pickle", "Pickle"), (".slang", "Slang"),
     (".axs.erb", "NetLinx+ERB"), (".mms", "Module Management System"),
     (".cil", "CIL"),
-    # batch-17 widening (scripts/widen_langs17.py): VB6 designer files
+    # VB6 designer files
     (".ctl", "Visual Basic 6.0"), (".dsr", "Visual Basic 6.0"),
 ]
 
@@ -344,7 +338,8 @@ def _cascade_wide_oracle_sql() -> str:
 # (ext, content). Expected labels restated literally by the DuckDB oracle
 # and independently cross-checked row-by-row against the python oracle in
 # tests/test_snapshot_batch3.py. Reference semantics: src/index.ts:320-361
-# (first matching rule wins; rules gated to the candidate set).
+# (first matching rule wins; rules gated to the candidate set). Where each
+# rule comes from: linguistjs_spark/data/PROVENANCE.md.
 _HEUR_CASES = [
     (".as", "package com.example\nclass Main {}", "ActionScript"),
     (".as", "shared abstract class Foo {}", "AngelScript"),
@@ -427,9 +422,8 @@ _HEUR_CASES = [
     (".x", "%hook SpringBoard\n%end", "Logos"),
     (".x", "SECTIONS\n{\n . = 0x10000;\n}", "Linker Script"),
     (".yy", '{\n "rules": []\n}', "JSON"),
-    # batch-4 groups (scripts/widen_langs4.py): .al/.dsp/.i/.star arrive
-    # with their upstream disambiguation; .cl exercises the pre-existing
-    # group's Cool rule, dead until Cool joined the snapshot in batch 4.
+    # .al/.dsp/.i/.star with their upstream disambiguation; .cl exercises
+    # the Cool rule.
     (".al", "codeunit 50100 MyHandler\n{\n    trigger OnRun()\n"
             "    begin\n    end;\n}", "AL"),
     (".al", "use strict;\nmy $x = shift;\nprint $x;\n", "Perl"),
@@ -437,9 +431,8 @@ _HEUR_CASES = [
     (".dsp", '# Microsoft Developer Studio Project File - Name="demo"\n',
      "Microsoft Developer Studio Project"),
     (".i", "%module demo\n%{\n#include <demo.h>\n%}\n", "SWIG"),
-    # batch 18 flipped this pin: upstream's .i group leads with the m68k
-    # named pattern, so moveq content is Motorola 68K Assembly (the old
-    # Assembly pin was pinning the branch's absence)
+    # upstream's .i group leads with the m68k named pattern, so moveq
+    # content is Motorola 68K Assembly
     (".i", "\tmoveq\t#1,d0\n\trts\n", "Motorola 68K Assembly"),
     (".i", "section .text\nglobal _start\n", "Assembly"),
     (".star", "data_demo\nloop_\n_atom_site.id\n1 2 3\n", "STAR"),
@@ -447,9 +440,8 @@ _HEUR_CASES = [
     (".cl", "(defun hello (x)\n  (print x))", "Common Lisp"),
     (".cl", "class Main inherits IO {\n  main() : Object { 0 }\n};", "Cool"),
     (".cl", "__kernel void add(__global float* a) {}", "OpenCL"),
-    # batch-5 groups (scripts/widen_heuristics5.py): Raku/Turing rules on
-    # .pl/.pm/.t were dead until their languages claimed the extensions;
-    # .cp/.g/.tst are new; .ts exercises the resurrected XML rule.
+    # Raku/Turing rules on .pl/.pm/.t; .cp/.g/.tst; .ts exercises the XML
+    # rule.
     (".pl", "likes(alice, bob).\nhappy(X) :- likes(X, _).", "Prolog"),
     (".pl", "use strict;\nmy @xs = (1, 2);\n", "Perl"),
     (".pl", "use v6;\nsay 'hello';\n", "Raku"),
@@ -466,9 +458,8 @@ _HEUR_CASES = [
     (".tst", "// Scilab test\ndisp(1)\n", "Scilab"),
     (".ts", '<?xml version="1.0"?>\n<TS version="2.1"></TS>\n', "XML"),
     (".ts", "import { x } from './x';\nexport const y = 1;\n", "TypeScript"),
-    # batch-6 groups (scripts/widen_heuristics6.py): OpenAPI/MiniYAML over
-    # .json/.yaml, man-page suffixes, 68k vs gas .s, plus the repaired .pod
-    # (fallback Pod, was dead-Perl) and .inc (SQL claims the ext upstream).
+    # OpenAPI/MiniYAML over .json/.yaml, man-page suffixes, 68k vs gas .s,
+    # .pod (fallback Pod) and .inc (SQL claims the ext upstream).
     # Heuristic winners keep their RAW language name (src/index.ts:331-336
     # assigns the rule's language, bypassing group collapse).
     (".bas", '#include "stdio.bi"\nPrint "hi"', "FreeBASIC"),
@@ -533,7 +524,6 @@ _HEUR_CASES = [
     (".pod", "=head1 NAME\ndemo - a thing\n", "Pod"),
     (".inc", "SELECT id FROM users;\n", "SQL"),
     (".inc", "<?php\necho 1;\n", "PHP"),
-    # batch 7 (widen_heuristics7.py)
     (".b", "+++>+>+<[-]\n", "Brainfuck"),
     (".b", "implement Hello;\ninclude \"sys.m\";\n", "Limbo"),
     (".j", "@import <Foundation/CPObject.j>\n@implementation App\n@end\n",
@@ -551,14 +541,12 @@ _HEUR_CASES = [
     (".mask", "%YAML 1.1\n%TAG !u! tag:unity3d.com,2011:\n",
      "Unity3D Asset"),
     (".mask", ".page > .content {\n  h4 > 'Title'\n}\n", "Mask"),
-    # batch 8 (widen_langs8.py)
     (".mo", "actor Main {\n  public func greet() {};\n}\n", "Motoko"),
     (".mo", "model Pendulum\n  Real x;\nend Pendulum;\n", "Modelica"),
     (".rsc", "/interface bridge\nadd name=br0\n", "RouterOS Script"),
     (".rsc", "module Demo\nimport IO;\n", "Rascal"),
     (".cls", "public with sharing class AccountCtrl {\n}\n", "Apex"),
     (".ncl", "begin\n  f = addfile(\"in.nc\", \"r\")\nend\n", "NCL"),
-    # batch 9 (widen_langs9.py)
     (".sch", '<?xml version="1.0"?>\n<eagle version="9.6.2">\n</eagle>\n',
      "Eagle"),
     (".sch", "EESchema Schematic File Version 4\nEELAYER 30 0\n",
@@ -570,13 +558,11 @@ _HEUR_CASES = [
      "    INDEX 01 00:00:00\n", "Cue Sheet"),
     (".cue", 'package example\n\nmsg: "hello"\n', "CUE"),
     (".e", "def greeter := when (x) -> { x }\n", "E"),
-    # batch 10 (widen_heuristics10.py)
     (".m", "(* ::Package:: *)\nf[x_] := x^2\n", "Mathematica"),
     (".m", "% plot a sine\nx = 0:0.1:pi;\n", "MATLAB"),
     (".frag", "#version 330 core\nout vec4 color;\nvoid main() {}\n",
      "GLSL"),
     (".frag", "'use strict';\nmodule.exports = 1;\n", "JavaScript"),
-    # batch 11 (widen_langs11.py)
     (".mod", "NEURON {\n    SUFFIX pas\n}\n", "NMODL"),
     (".mod", "obj-m += hello.o\n", "Linux Kernel Module"),
     (".r", "#include \"Types.r\"\nresource 'MENU' (128) {\n};\n", "Rez"),
@@ -588,7 +574,7 @@ _HEUR_CASES = [
     (".ncl", "let port = 8080 in\n{ port = port }\n", "Nickel"),
     (".nas", "var pos = geo.aircraft_position();\n", "Nasal"),
     (".nas", "section .text\n    mov eax, 1\n", "Assembly"),
-    # batch 12 (widen_langs12.py): upstream .inc membership
+    # upstream .inc membership
     (".inc", "%macro PUSH_ALL 0\nsection .text\n", "Assembly"),
     (".inc", "{$IFDEF FPC}\nprocedure Foo;\n{$ENDIF}\n", "Pascal"),
     (".inc", "#declare Wood = texture { pigment { rgb 1 } }\n",
@@ -597,29 +583,28 @@ _HEUR_CASES = [
     (".inc", "#if defined _mylib_included\n#endinput\n#endif\n",
      "SourcePawn"),
     (".inc", 'script_name("Port scan");\nscript_id(99999);\n', "NASL"),
-    # batch 13 (widen_heuristics13.py): Lean/Lean 4, Roff/Noir, XML/HCL
+    # Lean/Lean 4, Roff/Noir, XML/HCL
     (".lean", "import data.nat.basic\nopen nat\n", "Lean"),
     (".lean", "import Mathlib.Tactic\ntheorem t : 1 = 1 := rfl\n", "Lean 4"),
     (".nr", '.\\" man page source\n.TH FOO 1\n', "Roff"),
     (".nr", "fn main() {\n    assert(1 == 1);\n}\n", "Noir"),
     (".workflow", '<?xml version="1.0"?>\n<workflow></workflow>\n', "XML"),
     (".workflow", 'workflow "on-push" {\n  on = "push"\n}\n', "HCL"),
-    # batch 14 (widen_heuristics14.py): Mojo/XML
+    # Mojo/XML
     (".mojo", "from python import Python\nfn main():\n    pass\n", "Mojo"),
     (".mojo", '<?xml version="1.0"?>\n<intention/>\n', "XML"),
-    # batch 15 (widen_heuristics15.py): FLUX/HLSL and Mathematica/Text
+    # FLUX/HLSL and Mathematica/Text
     (".fx", "func blur(img, radius) (\n    img\n)\n", "FLUX"),
     (".fx", "technique T0 {\n    pass P0 {}\n}\n", "HLSL"),
     (".nb", "(* Content-type: application/vnd.wolfram.mathematica *)\n"
             "Notebook[{Cell[\"hi\"]}]\n", "Mathematica"),
     (".nb", "meeting notes\n- agenda item one\n- agenda item two\n", "Text"),
-    # batch 16 (widen_heuristics16.py): new branches in existing groups
+    # X PixMap in .pm, GLSL in .gs
     (".pm", "/* XPM */\nstatic char *icon[] = {\n", "X PixMap"),
     (".gs", "#version 330 core\nlayout(points) in;\nvoid main() {}\n",
      "GLSL"),
-    # batch 18 (widen_heuristics18.py): upstream rule-shape parity —
-    # pattern-less fallbacks (.ls/.pluginspec/.gml no-op vs C9, .yy is a
-    # real delta: non-JSON content -> Yacc) and the .i m68k lead rule
+    # upstream rule-shape parity: pattern-less fallbacks (.ls/.pluginspec/
+    # .gml no-op vs C9, .yy is a real delta: non-JSON content -> Yacc)
     (".ls", "package demo.app {\n    public class App {}\n}\n",
      "LoomScript"),
     (".ls", "square = (x) -> x * x\nconsole.log square 4\n", "LiveScript"),
@@ -3231,7 +3216,7 @@ def _url_tracking_oracle_sql() -> str:
         "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
         "url_raw, '^([^?]*)\\?', '\\1?&'), "
         f"'&({TRACKING_PARAM_PAT})=[^&#]*', '', 'g'), "
-        "'\\?&', '?', 'g'), '\\?$', '')"
+        "'^([^?]*)\\?&', '\\1?'), '\\?$', '')"
     )
     return f"""
     WITH m AS ({_MESSY_URL_SQL}),

@@ -39,11 +39,6 @@ class QualityFilterConfig:
     ignored_languages: tuple[str, ...] = ()
     # opts.ignoredFiles globs (src/index.ts:69)
     ignored_globs: tuple[str, ...] = ()
-    # Null out `text` before the classify UDF for rows whose kernel paths
-    # never read it (no shebang/modeline first line, ext not in
-    # content_needing_exts) — cuts the Arrow transfer to the python worker.
-    # Off switch exists for A/B measurement only; semantics are identical.
-    gate_udf_text: bool = True
 
     # ---- graft additions (BASELINE.json north_star) ----
     # Derive `text` from `html` (operators/extract.py native chain) when the

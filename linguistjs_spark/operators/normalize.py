@@ -11,8 +11,9 @@ gate malformed docs):
     engine-portable mapping (one ``translate`` + two ``regexp_replace``),
     never letters, so langid/perplexity stay unaffected.
   * ``mojibake_stats`` / ``bad_unicode_col`` — U+FFFD replacement chars
-    (the scar of a wrong decode upstream) and C0/C1-ish control chars as
-    fractions; docs over threshold are decode casualties, not language.
+    (the scar of a wrong decode upstream) and control chars (C0 except
+    tab/LF/CR, plus DEL; C1 is not counted) as fractions; docs over
+    threshold are decode casualties, not language.
 
 All native Column expressions (whole-text ``translate``/``regexp_count``
 scans inside codegen, zero joins/shuffles); the DuckDB oracles restate the

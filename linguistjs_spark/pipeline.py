@@ -140,7 +140,7 @@ def run_pipeline(
     # fast-path rows ship ~nothing to the python worker. (text is already
     # NULL for ineligible rows, so the gate composes with row liveness.)
     first = F.substring_index(F.col("text"), "\n", 1)
-    needs_text = F.lit(not cfg.gate_udf_text)
+    needs_text = F.lit(False)
     if not cfg.quick:
         if cfg.check_shebang:
             needs_text = needs_text | first.startswith("#!")

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import hashlib
 import time
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +58,31 @@ def completed_buckets(spark: SparkSession, lineage_dir: str, snapshot: str) -> s
     return {r["bucket"] for r in rows}
 
 
+def _append_lineage(spark: SparkSession, lineage_dir: str, rows: list[tuple]) -> None:
+    """Append one status='ok' lineage row per
+    (bucket, input_snapshot, rows_in, rows_kept, wall_ms) tuple."""
+    now = datetime.now()
+    spark.createDataFrame(
+        [(b, snap, "ok", n_in, n_kept, ms, now) for b, snap, n_in, n_kept, ms in rows],
+        schema=LINEAGE_SCHEMA,
+    ).write.mode("append").parquet(lineage_dir)
+
+
+def _overwrite_buckets(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Write ``df`` partitioned by ``bucket`` with dynamic partition
+    overwrite: only the buckets present in ``df`` are replaced, so a
+    crashed half-written bucket is rewritten wholesale on the next run
+    (write-audit-publish per partition, the parquet-dir analog of
+    Iceberg's overwritePartitions)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev_mode = spark.conf.get(key, "static")
+    spark.conf.set(key, "dynamic")
+    try:
+        df.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    finally:
+        spark.conf.set(key, prev_mode)
+
+
 def resumable_run(
     spark: SparkSession,
     pages: DataFrame,
@@ -88,22 +114,13 @@ def resumable_run(
         return {"processed": [], "skipped": skipped, "snapshot": snapshot}
 
     # ONE job writes every pending bucket (VERDICT r01 #5 — the per-bucket
-    # loop ran ~2 full input scans per bucket). partitionBy(bucket) with
-    # dynamic partition overwrite keeps the per-bucket idempotent-overwrite
-    # contract: only the buckets present in this write are replaced, a
-    # crashed half-written bucket is rewritten wholesale on the next run
-    # (write-audit-publish per partition, the parquet-dir analog of
-    # Iceberg's overwritePartitions).
+    # loop ran ~2 full input scans per bucket); the dynamic overwrite keeps
+    # the per-bucket idempotent-overwrite contract.
     t0 = time.perf_counter()
     bucket_col = F.pmod(F.xxhash64("url"), F.lit(num_buckets)).cast("int")
     part = pages.filter(bucket_col.isin(pending))
     labels = run_pipeline(spark, part, cfg).withColumn("bucket", bucket_col)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        labels.write.mode("overwrite").partitionBy("bucket").parquet(labels_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    _overwrite_buckets(spark, labels, labels_dir)
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
     # audit pass: rows_in/rows_kept per bucket from ONE scan of the WRITTEN
@@ -119,16 +136,9 @@ def resumable_run(
              F.sum(F.col("keep").cast("long")).alias("k"))
         .collect()
     }
-    lineage_rows = [
-        (b, snapshot, "ok", *stats.get(b, (0, 0)), wall_ms) for b in pending
-    ]
-    spark.createDataFrame(
-        lineage_rows,
-        schema="bucket int, input_snapshot string, status string, "
-        "rows_in long, rows_kept long, wall_ms long",
-    ).withColumn("finished_at", F.current_timestamp()).write.mode(
-        "append"
-    ).parquet(lineage_dir)
+    _append_lineage(spark, lineage_dir, [
+        (b, snapshot, *stats.get(b, (0, 0)), wall_ms) for b in pending
+    ])
 
     if crash_after_write:
         raise RuntimeError(f"injected failure after {fail_after} buckets")
@@ -213,13 +223,7 @@ def resumable_training_mix(
         clean, fractions, strata_col="lang", key_col="doc_id", seed=seed
     ).withColumn("bucket", bucket_col)
 
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        sampled.write.mode("overwrite").partitionBy("bucket").parquet(mix_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    _overwrite_buckets(spark, sampled, mix_dir)
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
     stats = {
@@ -228,17 +232,10 @@ def resumable_training_mix(
         .filter(F.col("bucket").isin(pending))
         .groupBy("bucket").agg(F.count("*").alias("n")).collect()
     }
-    lineage_rows = [
-        (b, snapshot, "ok", stats.get(b, 0), stats.get(b, 0), wall_ms)
+    _append_lineage(spark, lineage_dir, [
+        (b, snapshot, stats.get(b, 0), stats.get(b, 0), wall_ms)
         for b in pending
-    ]
-    spark.createDataFrame(
-        lineage_rows,
-        schema="bucket int, input_snapshot string, status string, "
-        "rows_in long, rows_kept long, wall_ms long",
-    ).withColumn("finished_at", F.current_timestamp()).write.mode(
-        "append"
-    ).parquet(lineage_dir)
+    ])
 
     if crash_after_write:
         raise RuntimeError(f"injected failure after {fail_after} buckets")
@@ -304,13 +301,7 @@ def resumable_pagerank(
         ranks = spark.read.parquet(f"{output_dir}/ranks/iter={it}")
         wall_ms = int((time.perf_counter() - t0) * 1000)
         n_rows = ranks.count()
-        spark.createDataFrame(
-            [(it, snapshot, "ok", n_rows, n_rows, wall_ms)],
-            schema="bucket int, input_snapshot string, status string, "
-            "rows_in long, rows_kept long, wall_ms long",
-        ).withColumn("finished_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(lineage_dir)
+        _append_lineage(spark, lineage_dir, [(it, snapshot, n_rows, n_rows, wall_ms)])
         processed.append(it)
     if crash_after:
         raise RuntimeError(f"injected failure after {fail_after} iterations")

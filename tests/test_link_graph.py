@@ -121,8 +121,10 @@ def test_resumable_pagerank_crash_and_resume(spark, tmp_path):
     # per-iteration checkpointing: crash after 2 of 4 iterations, resume
     # completes 3-4 from the committed iter-2 table, re-run is a no-op,
     # and the final ranks match the one-shot in-memory variant
+    from pyspark.sql.types import StructType
+
     from linguistjs_spark.streaming.resume import (
-        pagerank_ranks, resumable_pagerank,
+        LINEAGE_SCHEMA, pagerank_ranks, resumable_pagerank,
     )
 
     edge_rows = [("a", "b", 2), ("a", "c", 1), ("b", "c", 1), ("c", "a", 1)]
@@ -136,6 +138,8 @@ def test_resumable_pagerank_crash_and_resume(spark, tmp_path):
     assert res["processed"] == [3, 4]
     again = resumable_pagerank(spark, edges, out, iters=4)
     assert again["processed"] == []
+    assert spark.read.parquet(out + "/_lineage").schema == \
+        StructType.fromDDL(LINEAGE_SCHEMA)
 
     got = {r.domain: r["rank"] for r in pagerank_ranks(spark, out, 4).collect()}
     want = {r.domain: r["rank"]

@@ -54,9 +54,9 @@ def test_batch7_claimant_sets():
 
 
 def test_batch7_every_contested_ext_is_grouped():
-    # closure property the widening scripts enforce one batch at a time:
-    # after batch 7 NO extension claimed by >1 snapshot language lacks a
-    # disambiguation group (shebang-routed .cgi/.fcgi excepted by design)
+    # snapshot-wide closure: NO extension claimed by >1 snapshot language
+    # lacks a disambiguation group (shebang-routed .cgi/.fcgi excepted by
+    # design)
     langs, heur = _load()
     grouped = {e.lower() for g in heur["disambiguations"]
                for e in g["extensions"]}

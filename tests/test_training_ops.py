@@ -294,7 +294,10 @@ def test_media_real_wav_decode(spark):
 
 
 def test_resumable_run_idempotent(spark, tmp_path):
-    from linguistjs_spark.streaming.resume import read_labels, resumable_run
+    from pyspark.sql.types import StructType
+
+    from linguistjs_spark.streaming.resume import (
+        LINEAGE_SCHEMA, read_labels, resumable_run)
     from linguistjs_spark.sources.pages import pages_df
 
     out = str(tmp_path)
@@ -310,6 +313,8 @@ def test_resumable_run_idempotent(spark, tmp_path):
     # third run: everything skipped (fully idempotent)
     r3 = resumable_run(spark, pg, out + "/run", num_buckets=4)
     assert r3["processed"] == [] and len(r3["skipped"]) == 4
+    assert spark.read.parquet(out + "/run/_lineage").schema == \
+        StructType.fromDDL(LINEAGE_SCHEMA)
 
 
 def test_ivf_topk_recall(spark, emb):
@@ -468,7 +473,10 @@ def test_resumable_training_mix_crash_idempotent(spark, tmp_path):
 
     from linguistjs_spark.operators.decontam import contamination_flags
     from linguistjs_spark.operators.sampling import stratified_sample
+    from pyspark.sql.types import StructType
+
     from linguistjs_spark.streaming.resume import (
+        LINEAGE_SCHEMA,
         resumable_training_mix,
         training_mix_rollup,
     )
@@ -495,6 +503,8 @@ def test_resumable_training_mix_crash_idempotent(spark, tmp_path):
     r3 = resumable_training_mix(
         spark, docs, out + "/mix", fracs, num_buckets=4)
     assert r3["processed"] == [] and len(r3["skipped"]) == 4
+    assert spark.read.parquet(out + "/mix/_lineage").schema == \
+        StructType.fromDDL(LINEAGE_SCHEMA)
 
     # one-shot composed plan on the same input (the q_training_mix shape)
     w = Window.partitionBy(F.xxhash64("text")).orderBy("doc_id")

@@ -434,6 +434,24 @@ def test_strip_tracking_idempotent_and_merges_dups(spark):
     assert [r.t for r in twice.collect()] == [r.s for r in s.collect()]
 
 
+def test_strip_tracking_keeps_later_literal_qmark_amp(spark):
+    # step 3 undoes exactly the `?&` step 1 inserted after the first `?`;
+    # a literal `?&` later in the query, or a raw query that starts with
+    # `&`, is not a separator to repair
+    from linguistjs_spark.operators.url_ops import strip_tracking_params_col
+
+    cases = [
+        ("https://e.x/p?q=a?&b=c", "https://e.x/p?q=a?&b=c"),
+        ("https://e.x/p?utm_source=n&q=a?&b=c", "https://e.x/p?q=a?&b=c"),
+        ("https://e.x/p?&a=1", "https://e.x/p?&a=1"),
+        ("https://e.x/p?&utm_x=1&a=2", "https://e.x/p?&a=2"),
+    ]
+    df = spark.createDataFrame([(u,) for u, _ in cases], "u string")
+    got = [r.s for r in df.select(
+        strip_tracking_params_col(F.col("u")).alias("s")).collect()]
+    assert got == [want for _, want in cases]
+
+
 def test_strip_tracking_fuzz_vs_twin(spark):
     """200 random URLs assembled from param/path pools vs an imperative
     re-based twin of the same 4-step chain (first-'?' anchored rewrite,
@@ -449,7 +467,7 @@ def test_strip_tracking_fuzz_vs_twin(spark):
             return None
         t = re.sub(r"^([^?]*)\?", r"\1?&", u)
         t = re.sub(r"&(" + TRACKING_PARAM_PAT + r")=[^&#]*", "", t)
-        t = re.sub(r"\?&", "?", t)
+        t = re.sub(r"^([^?]*)\?&", r"\1?", t)
         return re.sub(r"\?$", "", t)
 
     rng = random.Random(20260821)
@@ -465,7 +483,8 @@ def test_strip_tracking_fuzz_vs_twin(spark):
         if n or rng.random() < 0.3:
             u += "?" + "&".join(rng.choice(params) for _ in range(max(n, 1)))
         urls.append(u)
-    urls += [None, "https://e.x/?utm_a=1", "https://e.x/p?a=b?c=d&utm_x=1"]
+    urls += [None, "https://e.x/?utm_a=1", "https://e.x/p?a=b?c=d&utm_x=1",
+             "https://e.x/p?q=a?&b=c&utm_x=1"]
     df = spark.createDataFrame(
         [(i, u) for i, u in enumerate(urls)], "i long, u string")
     got = {r.i: r.s for r in df.select(
